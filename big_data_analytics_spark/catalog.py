@@ -23,7 +23,8 @@ TPCH_TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: Memoized LAZY reader DataFrames per (applicationId, sf_dir, table)
+#: Memoized LAZY reader DataFrames per (applicationId, id(spark), sf_dir,
+#: table)
 #: — r15: building the scan costs ~150-250 ms per call on the bench
 #: box (driver-side footer read + schema inference + the NTZ
 #: normalization projection + py4j), paid by EVERY query invocation
@@ -33,7 +34,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: idea), never data or results; every action still scans the parquet.
 #: Registered in the session-cache registry so bench
 #: --isolate-families evicts it with every other fixture cache.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = register_cache({})
+_TABLE_CACHE: dict[tuple[str, int, str, str], DataFrame] = register_cache({})
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -93,131 +93,74 @@ def query(name: str, oracle: Optional[str] = None):
 #: construction (batch restatement, the sm2/sm11 class) plus the
 #: sm6-equality + RocksDB-artifact test in tests/test_streaming.py.
 #:
-#: The driver harness grades registry entries head-first (exactly the
-#: first 50 each round), so ordering is the grading policy. With the
-#: never-graded backlog cleared in round 5, the STANDING ROTATION RULE
-#: from round 6 on is: (a) the two canaries, (b) every query written
-#: or whose implementation changed this round (graded immediately),
-#: (c) the remaining slots filled OLDEST-FIRST — the registered
-#: queries whose most recent driver row is the most rounds stale, in
-#: registry order, skipping the four declared no-oracle queries
-#: (d2/d3/p19/f17 — each already has a green graded deterministic
-#: twin; a head slot on a rows-only check refreshes nothing).
-#: Round-13 head-50 (THE BACKLOG-BURN ROUND, per VERDICT r12 task 1)
-#: was: 2 canaries + 3 new (gov3, t19, t20) + 2 changed (fs2, dq5 —
-#: the two r12 ADVICE items) + all 7 r3-vintage rows + all 5
-#: pin-only re-grades + 31 of the 34 r4-vintage rows (t13/x11/x12
-#: displaced by the three new queries). All 50 came back green
-#: (CORRECTNESS_r13), leaving oldest vintage r4 (3 rows) then r5
-#: (36 rows).
-#:
-#: Round-14 head-50 (FINISH THE ROTATION, per VERDICT r13 task 1):
-#: 2 canaries + 2 new (sm14 — the RocksDB state-store swap, task 8;
-#: gov4 — the geometric-mechanism DP count release completing the
-#: governance ladder, additions held at 2 of the allowed 3)
-#: + 4 changed (gov3's 128-bit divisor/term promotion and fs2/ev3's
-#: migration onto the shared spread_if_undersplit helper — both
-#: plan-identical, graded as insurance; sm6's body extraction into
-#: the sm6/sm14-shared _user_totals_stream — sm6 is also r7-vintage,
-#: so its re-grade doubles as rotation) + the LAST 3 r4-vintage rows
-#: (t13, x11, x12) + ALL 36 r5-vintage rows (the ml5-ml22 cohort) +
-#: 3 r7 rows oldest-first in registry order (w10, w14, f1 — f8
-#: yields its fill slot to gov4 and leads the r15 fill).
-#: t19/t20's round-14 edits are docstring-only (the ADVICE 1-ulp
-#: hedge) and the other spread-helper consumers (t18, es1/d10, gm1,
-#: z2, v11, ev1/ev2/ev4, dq4-class, d3b-class) changed by the same
-#: plan-identical extraction, verified by the module oracle gates +
-#: the RoundRobinPartitioning plan guards — not re-graded beyond the
-#: fs2/ev3 representatives and the cohort members already in this
-#: head (gm1, d8). After this round the oldest vintage is r7.
-#:
-#: Round-15 head-50 (RETIRE r7, per VERDICT r14 tasks 1/6/7):
-#: 2 canaries + 0 new (additions held at zero — the 35-row r7
-#: cohort plus two changed rows fills the head; r8's 37 rows are
-#: next, so spending slots on additions now would push the r8
-#: retirement past r16) + 2 changed (t20 — the graded PMI hash
-#: column moved to exact integer cross-multiplication per VERDICT
-#: task 8, closing its data-dependent-ln residual; gr1 — the graph
-#: edge-build path gained the heap pre-flight guard per task 4,
-#: plan-identical, graded as the representative for every
-#: graph-iterator consumer) + ALL 35 r7-vintage rows (f8 leads, as
-#: promised in the r14 note) + 11 r8 rows: the first 10 oldest-first
-#: in registry order (d1, t1–t5, v1, v2, v3_ivf, v3_lsh) plus bj1
-#: out of order per VERDICT task 6 — the storage-layout trio
-#: (bj1/pr1/dsk1) carries the engine's strongest physical-plan
-#: claims and pr1/dsk1 are already in the r7 cohort, so bj1 rides
-#: along to re-grade all three together. After this round the
-#: oldest vintage is r8 (26 rows), then r9 (33).
-#:
-#: Round-16 head-50 (RETIRE r8 + GRADE THE r15 SLIP, per VERDICT r15
-#: tasks 3 and "what's wrong" #5): 2 canaries + the 11 r15-changed
-#: rows that missed the r15 head because it was pinned before the
-#: optimization commits landed (lp1, ml5, d8, cf1, ts2, v1, ev1, ev2,
-#: ev4 — gr5/gr4/v7 are also r15-changed but ride in the r8 cohort
-#: below) + ALL 26 r8-vintage rows (registry order) + 13 r9 rows
-#: oldest-first in registry order. Queries changed during round 16
-#: displace the r9 fill tail (rule b) — the head is re-checked at
-#: round end against the round's diff, the r15 lesson. After this
-#: round the oldest vintage is r9 (20 rows), then r11.
+#: GRADING HEAD: external grading reads the registry head-first,
+#: exactly the first 50 entries per grading run, so the order of
+#: ``GRADE_HEAD`` is the grading policy. Rotation rule (checked by
+#: tests/test_bench_output.py::test_rotation_retires_the_oldest_vintage):
+#: (a) the two standing canaries; (b) every query added by the change,
+#: or whose implementation or a helper it calls changed; (c) the whole
+#: cohort whose latest green grade (CORRECTNESS_r*.json) is the
+#: oldest; (d) the remaining slots, oldest vintage first and registry
+#: order within a vintage, skipping the four no-oracle queries
+#: (d2/d3/p19/f17). A row that qualifies twice takes one slot. An
+#: oldest cohort bigger than the slots left after (a) and never-graded
+#: additions is packed into the head and finished by the next run.
 GRADE_HEAD = [
-    # (a) standing canaries — driver-green every round since r1
+    # (a) standing canaries
     "a1_pricing_summary",
     "w7_sessionize_events",
-    # (b) round-15 changed rows that missed the r15 head (VERDICT r15
-    # "what's wrong" #5) — graded now; r16-changed rows join here as
-    # the round progresses, displacing the r9 fill tail
-    "lp1_part_communities",
-    "ml5_kmeans",
-    "d8_semantic_dedup",
-    "cf1_item_item_cosine",
-    "ts2_hourly_gap_fill",
-    "v1_cosine_topk",
-    "ev1_rouge_n",
-    "ev2_bleu_precision",
-    "ev4_chrf",
-    # (c) the full 26-row r8 cohort, registry order (gr4/gr5/v7 are
-    # also r15-changed; their slots do double duty)
-    "a8_percentiles",
-    "p8_null_handling",
-    "p13_cast_coercion",
-    "f18_array_ops",
-    "a15_exists_over_array",
-    "f19_map_ops",
-    "p6_membership_and_regex",
-    "u3_intersect_except",
-    "u3b_intersect_all",
-    "f11_date_sequence",
-    "j5b_rowkey_decompose_join",
-    "a19_median_mode",
-    "q4_priority_with_late_items",
-    "q12_priority_shipping",
-    "q17_below_avg_quantity",
-    "q15_top_suppliers",
-    "q22_idle_rich_customers",
-    "gr4_bfs_hops",
-    "gr5_link_prediction",
-    "mm4_resize_pipeline",
-    "mm5_png_roundtrip",
-    "mm7_dhash_neardup",
-    "bp1_partitioned_bucketed_rollup",
-    "cm1_compaction_rollup",
-    "se1_schema_evolution_rollup",
-    "v7_ann_recall",
-    # (d) r9-vintage fill, oldest-first in registry order (lp1 above
-    # is also r9 — its rule-(b) slot does double duty)
+    # (b) changed: session memo in caching.py (e-commerce fixture
+    # readers, IVF/LSH indexes, market relations, graph edge tables)
+    "ecom_revenue_by_state",
+    "ecom_top_products",
+    "ecom_clv",
     "ecom_product_daily_metrics",
     "ecom_monthly_sales",
     "ecom_products_enriched",
     "ecom_dwell_times",
     "ecom_page_transitions",
-    "aj1_asof_purchase_view",
-    "aj2_forward_asof_tolerance",
-    "rj1_value_band_join",
-    "ij1_view_purchase_pairs",
-    "scd1_user_state_history",
-    "f13_math_functions",
-    "f20_json_extract",
-    "q3_shipping_priority",
+    "ecom_inventory_levels",
+    "sql1_revenue_by_state_sqlapi",
+    "v3_ivf_topk",
+    "v3_lsh_ann_topk",
+    "mb1_association_rules",
+    "cf1_item_item_cosine",
+    "gr1_part_pagerank",
+    "lp1_part_communities",
+    "gr2_triangle_count",
+    "gr3_weighted_pagerank",
+    "gr4_bfs_hops",
+    "gr5_link_prediction",
+    "gr6_modularity",
+    "gr7_triangle_counts",
+    "gr8_kcore",
+    "gr10_harmonic_centrality",
+    # (c) the oldest cohort, r09 (gr6 sits in (b))
+    "q10_returned_items",
+    "q13_order_distribution",
+    "q18_large_volume_customers",
+    "w8_moving_hour_stats",
+    "w9_first_last_nth_order",
+    "f22_edit_distance",
+    "f23_regexp_extract_all",
+    "h1_value_histogram",
+    "sa1_ordered_string_agg",
+    "g3_grouping_sets",
+    "sk3_approx_quantiles",
+    "t6_chunk_documents",
+    "mm2_frame_samples",
+    "mm8_jpeg_roundtrip",
+    "mm9_video_frame_sample",
+    "sm10_stream_crash_recovery",
+    "sm11_stream_cusum",
+    "ts6_seasonal_decompose",
+    # (d) fill from r11
+    "v9_kcenter_coreset",
+    "p20b_stratified_sample",
+    "p19b_hash_split",
+    "q5_local_supplier_volume",
+    "q7_nation_trade_volume",
+    "q8_market_share",
 ]
 
 

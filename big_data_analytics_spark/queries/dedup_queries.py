@@ -33,14 +33,7 @@ from big_data_analytics_spark.operators.similarity import (
     lsh_topk,
 )
 from big_data_analytics_spark.queries import REGISTRY, query
-from big_data_analytics_spark.caching import register_cache
-
-#: Session-cached LSH index relations (the graph-module pattern): the
-#: corpus signature build — 16 tables x 4 planes of interpreted
-#: 64-wide folds, the dominant cost of every probe — is a build-once
-#: structure in production, so build it once per (session, sf_dir)
-#: and serve every probe batch from the checkpoint.
-_LSH_INDEX_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+from big_data_analytics_spark.caching import memo
 
 
 def _doc_corpus_with_dups(spark: SparkSession, sf_dir: str, n: int = 100) -> DataFrame:
@@ -182,15 +175,14 @@ def v3_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is hash-checked against DuckDB — the planes are plan-time
     md5-derived constants shared verbatim with the oracle
     (_planes_sql), so LSH stops being a "no-oracle" operator. The
-    corpus signature relation is the session-cached build-once index
-    (_LSH_INDEX_CACHE): only the 3-vector query batch is signed per
-    probe, matching how production serves an LSH index."""
+    corpus signature relation is the session-memoized build-once
+    index: only the 3-vector query batch is signed per probe, matching
+    how production serves an LSH index."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _LSH_INDEX_CACHE.get(key)
-    if idx is None:
+
+    def build() -> DataFrame:
         # The index build evaluates 16 tables x 4 planes x 64-wide
         # interpreted folds per vector, but the embeddings parquet
         # arrives as ~1 input split — repartition so the one-off
@@ -198,11 +190,11 @@ def v3_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # partitions for the amplified work, not the input bytes).
         corpus = (emb.filter(F.col("vec_id") >= 3)
                   .repartition(spark.sparkContext.defaultParallelism))
-        idx = lsh_index(corpus, n_planes=4,
-                        n_tables=16).localCheckpoint()
-        _LSH_INDEX_CACHE[key] = idx
+        return lsh_index(corpus, n_planes=4,
+                         n_tables=16).localCheckpoint()
+
     return lsh_topk(None, queries_df, k=5, n_planes=4, n_tables=16,
-                    index=idx)
+                    index=memo(spark, ("lsh_index", sf_dir), build))
 
 
 @query(

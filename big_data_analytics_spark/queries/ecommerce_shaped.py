@@ -39,12 +39,10 @@ from big_data_analytics_spark.pipelines import (
     top_products,
 )
 from big_data_analytics_spark.queries import query
-from big_data_analytics_spark.caching import register_cache
+from big_data_analytics_spark.caching import memo
 
 _TABLES = ("categories", "products", "users", "sessions", "transactions")
 _FIXTURE_ROOT = Path(__file__).resolve().parents[2] / ".fixtures"
-
-_CACHE: dict[tuple, dict[str, DataFrame]] = register_cache({})
 
 
 def fixture_path(n_sessions: int) -> Path:
@@ -59,8 +57,8 @@ def _fixture(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     oracle inputs: DuckDB reads the identical files.
     """
     n_sessions = 500 if "0.001" in sf_dir else 2000
-    key = (id(spark), n_sessions)
-    if key not in _CACHE:
+
+    def build() -> dict[str, DataFrame]:
         root = fixture_path(n_sessions)
         if not (root / "_DONE").exists():
             d = gen_all(spark, n_users=100, n_products=50,
@@ -73,16 +71,9 @@ def _fixture(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             for crc in root.rglob("*.crc"):
                 crc.unlink()
             (root / "_DONE").touch()
-        _CACHE[key] = {t: spark.read.parquet(str(root / t)) for t in _TABLES}
-    return _CACHE[key]
+        return {t: spark.read.parquet(str(root / t)) for t in _TABLES}
 
-
-def clear_fixture_cache() -> None:
-    """Drop cached fixture frames (tests / long-lived drivers: the
-    cache is keyed by ``id(spark)`` and would otherwise grow across
-    sessions). Parquet files stay on disk; the next ``_fixture`` call
-    just re-opens them."""
-    _CACHE.clear()
+    return memo(spark, ("ecom_fixture", n_sessions), build)
 
 
 #: Oracle-side fixture location — the correctness scale (sf0.01 →

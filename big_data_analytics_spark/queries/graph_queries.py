@@ -32,7 +32,7 @@ from big_data_analytics_spark.operators.graph import (
     pagerank,
 )
 from big_data_analytics_spark.queries import query
-from big_data_analytics_spark.caching import register_cache
+from big_data_analytics_spark.caching import memo
 
 _ITER = 5
 _TOPK = 20
@@ -174,61 +174,42 @@ def _edge_build_preflight(spark: SparkSession, li: DataFrame,
     return pairs
 
 
-#: One edge relation per (session, sf_dir), localCheckpoint-cached so
-#: gr1/lp1/gr2/gr3 share a single build instead of four. Keyed by
-#: applicationId so a new session never sees another session's blocks.
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
 def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EDGE_CACHE.get(key)
-    if df is None:
+    """The co-purchase edge relation, session-memoized and
+    localCheckpoint'd so gr1/lp1/gr2/gr3 share a single build."""
+    def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey")
         _edge_build_preflight(spark, li)
-        df = _build_weighted_edges(li).localCheckpoint()
-        _EDGE_CACHE[key] = df
-    return df
+        return _build_weighted_edges(li).localCheckpoint()
 
-
-#: Session-cached derived side tables of the co-purchase graph (r15):
-#: the (node, wsum) flow-denominator relation per weighted flag plus
-#: the measured stats every graph query re-derived per call (edge
-#: count, node count, id range). Same lifetime/eviction contract as
-#: _EDGE_CACHE — at 100 TB these are the persisted companions of the
-#: edge table, not per-query work; bench --isolate-families evicts
-#: them so no reading depends on sibling order.
-_NODE_INFO_CACHE: dict[tuple, tuple[DataFrame, dict]] = register_cache({})
-
-
-#: Session-cached src-hash-partitioned copy of the distinct edge set
-#: (r15): the in-session realization of "pre-bucket the edges by src"
-#: that gr4/gr10's docstrings prescribe for 100 TB — .persist()
-#: (NOT localCheckpoint: a checkpoint scan forgets its partitioning)
-#: so every per-hop frontier join reuses the edge side's
-#: HashPartitioning and only the bounded frontier shuffles.
-_EDGE_BY_SRC_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+    return memo(spark, ("graph_edges", sf_dir), build)
 
 
 def _edges_by_src(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EDGE_BY_SRC_CACHE.get(key)
-    if df is None:
+    """Session-memoized src-hash-partitioned copy of the distinct edge
+    set: the in-session realization of "pre-bucket the edges by src"
+    that gr4/gr10's docstrings prescribe for 100 TB — .persist() (NOT
+    localCheckpoint: a checkpoint scan forgets its partitioning) so
+    every per-hop frontier join reuses the edge side's
+    HashPartitioning and only the bounded frontier shuffles."""
+    def build() -> DataFrame:
         e = _weighted_edges(spark, sf_dir).select("src", "dst")
         n_edges = _graph_inputs(spark, sf_dir, weighted=False)[1]["n_edges"]
         para = spark.sparkContext.defaultParallelism
         n_parts = int(max(para, n_edges * 16 // (64 << 20) + 1))
         df = e.repartition(n_parts, "src").persist()
         df.count()  # materialize so hop timings measure hops
-        _EDGE_BY_SRC_CACHE[key] = df
-    return df
+        return df
+
+    return memo(spark, ("graph_edges_by_src", sf_dir), build)
 
 
 def _graph_inputs(spark: SparkSession, sf_dir: str,
                   weighted: bool) -> tuple[DataFrame, dict]:
-    """(node_info, stats) for the session edge relation: node_info is
-    the localCheckpoint'd (node, wsum) table built by the SAME
+    """(node_info, stats) for the session edge relation, session-
+    memoized per weighted flag: node_info is the localCheckpoint'd
+    (node, wsum) table built by the SAME
     operators.graph.build_node_info the operator would run internally;
     stats carries {'n_edges', 'n_nodes', 'min_node', 'max_node'}. The
     graph is symmetric by construction (both directions of every
@@ -236,9 +217,7 @@ def _graph_inputs(spark: SparkSession, sf_dir: str,
     the contract label_propagation's ``nodes`` parameter requires."""
     from big_data_analytics_spark.operators.graph import build_node_info
 
-    key = (spark.sparkContext.applicationId, sf_dir, weighted)
-    hit = _NODE_INFO_CACHE.get(key)
-    if hit is None:
+    def build() -> tuple[DataFrame, dict]:
         e = _weighted_edges(spark, sf_dir)
         if not weighted:
             e = e.select("src", "dst")
@@ -250,55 +229,27 @@ def _graph_inputs(spark: SparkSession, sf_dir: str,
         stats = {"n_edges": int(n_edges), "n_nodes": int(row["n"]),
                  "min_node": int(row["lo"] or 0),
                  "max_node": int(row["hi"] or 0)}
-        hit = (ni, stats)
-        _NODE_INFO_CACHE[key] = hit
-    return hit
+        return ni, stats
 
-
-#: LPA community labels per (session, sf_dir) — the same derived-
-#: relation caching as _EDGE_CACHE one level up: communities are
-#: computed once and every consumer (gr6 modularity today; any future
-#: per-community rollup) pays only its marginal cost. lp1 itself does
-#: NOT read this cache — its graded/benched number must measure the
-#: LPA rounds, not a checkpoint scan.
-#: LIFETIME: entries are localCheckpoint'd DataFrames pinned in
-#: executor block storage with NO eviction (same property as
-#: _EDGE_CACHE) — bounded here because the harness sweeps a handful
-#: of sf_dirs per session and each label relation is node-sized. A
-#: long-lived service sweeping many datasets would need an
-#: unpersist-on-displacement policy; deliberately not added while the
-#: only callers are the bench/test/driver harnesses.
-_LABEL_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+    return memo(spark, ("graph_inputs", sf_dir, weighted), build)
 
 
 def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _LABEL_CACHE.get(key)
-    if df is None:
+    """LPA community labels, session-memoized and localCheckpoint'd:
+    communities are computed once and every consumer (gr6 modularity
+    today) pays only its marginal cost. lp1 itself does NOT read this
+    — its graded/benched number must measure the LPA rounds, not a
+    checkpoint scan."""
+    def build() -> DataFrame:
         edges = _weighted_edges(spark, sf_dir).select("src", "dst")
         ni, st = _graph_inputs(spark, sf_dir, weighted=False)
-        df = label_propagation(
+        return label_propagation(
             edges, iterations=_LPA_ITER, assume_distinct=True,
             nodes=ni.select("node"),
             node_stats=(st["n_nodes"], st["min_node"], st["max_node"]),
             n_edges=st["n_edges"]).localCheckpoint()
-        _LABEL_CACHE[key] = df
-    return df
 
-
-def _sized_side(small: DataFrame, n_rows: int,
-                broadcast_max_rows: int = 5_000_000) -> DataFrame:
-    """Join-strategy pin for a MEASURED-small relation joined into an
-    edge-sized one: broadcast when the measured row count allows, else
-    force sort-merge. Never leave the choice to plan-time stats — a
-    localCheckpoint scan's estimate misled the optimizer into
-    broadcasting the 24M-row edge relation here (driver OOM at the
-    10× probe step; gr4's frontier join was the same failure class).
-    The pagerank/LPA ``broadcast_max_nodes`` rule, applied at the
-    query layer. Round 10 promoted this repo-wide as
-    operators.joins.sized_side; this wrapper keeps the graph-local
-    name and its tests stable."""
-    return sized_side(small, n_rows, broadcast_max_rows)
+    return memo(spark, ("graph_labels", sf_dir), build)
 
 
 @query("gr1_part_pagerank", oracle=_oracle())
@@ -842,7 +793,7 @@ def gr6_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     _weighted_edges precedent: at 100 TB communities are a derived
     relation you persist, and every consumer pays only its own
     marginal cost). Label attachments are strategy-pinned from the
-    MEASURED node count (:func:`_sized_side` — broadcast under 5M
+    MEASURED node count (:func:`sized_side` — broadcast under 5M
     nodes, forced sort-merge past it): leaving the choice to
     plan-time stats let the optimizer broadcast the 24M-row EDGE
     relation instead (driver OOM at the 10× probe; gr4's exact
@@ -853,10 +804,10 @@ def gr6_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _weighted_edges(spark, sf_dir).select("src", "dst")
     labels = _lpa_labels(spark, sf_dir)
     n_nodes = labels.count()  # cheap: labels is checkpoint-materialized
-    src_lab = _sized_side(
+    src_lab = sized_side(
         labels.select(F.col("node").alias("src"),
                       F.col("label").alias("src_label")), n_nodes)
-    dst_lab = _sized_side(
+    dst_lab = sized_side(
         labels.select(F.col("node").alias("dst"),
                       F.col("label").alias("dst_label")), n_nodes)
     within = (edges
@@ -976,7 +927,7 @@ def gr7_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     is two O(√m) arrays.
 
     Every node- or edge-sized attachment is strategy-pinned from a
-    MEASURED count (:func:`_sized_side`, gr6's rule): the two degree
+    MEASURED count (:func:`sized_side`, gr6's rule): the two degree
     attachments from the node count, and the two adjacency
     attachments from the UNDIRECTED EDGE count — adj has one row per
     source node but its array payload totals exactly |und| entries,
@@ -1001,8 +952,8 @@ def gr7_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     u_first = ((F.col("du") < F.col("dv"))
                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))))
-    ori = (und.join(_sized_side(du, n_nodes), "u")
-           .join(_sized_side(dv, n_nodes), "v")
+    ori = (und.join(sized_side(du, n_nodes), "u")
+           .join(sized_side(dv, n_nodes), "v")
            .select(F.when(u_first, F.col("u")).otherwise(F.col("v"))
                    .alias("a"),
                    F.when(u_first, F.col("v")).otherwise(F.col("u"))
@@ -1010,10 +961,10 @@ def gr7_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = (ori.groupBy("a")
            .agg(F.collect_list("b").alias("nbrs")))
     tri_c = (ori
-             .join(_sized_side(adj, n_edges), "a")
-             .join(_sized_side(adj.select(F.col("a").alias("b"),
-                                          F.col("nbrs").alias("nbrs_b")),
-                               n_edges), "b")
+             .join(sized_side(adj, n_edges), "a")
+             .join(sized_side(adj.select(F.col("a").alias("b"),
+                                         F.col("nbrs").alias("nbrs_b")),
+                              n_edges), "b")
              .select("a", "b",
                      F.explode(F.array_intersect("nbrs", "nbrs_b"))
                      .alias("c")))
@@ -1111,10 +1062,10 @@ def gr8_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint())
         n_keep = keep.count()  # cheap: checkpoint-materialized
         edges = (edges
-                 .join(_sized_side(keep.select(F.col("node").alias("u")),
-                                   n_keep), "u", "left_semi")
-                 .join(_sized_side(keep.select(F.col("node").alias("v")),
-                                   n_keep), "v", "left_semi")
+                 .join(sized_side(keep.select(F.col("node").alias("u")),
+                                  n_keep), "u", "left_semi")
+                 .join(sized_side(keep.select(F.col("node").alias("v")),
+                                  n_keep), "v", "left_semi")
                  .localCheckpoint())
         # the restriction only REMOVES edges, so an unchanged count
         # means an identical set — a fixed point; the remaining rounds
@@ -1285,8 +1236,8 @@ def gr10_harmonic_centrality(spark: SparkSession,
             frontier.withColumnRenamed("node", "src")
             .hint("SHUFFLE_HASH"), "src")
             .select("seed", F.col("dst").alias("node")).distinct()
-            .join(_sized_side(known.select("seed", "node"),
-                              10 * n_nodes),
+            .join(sized_side(known.select("seed", "node"),
+                             10 * n_nodes),
                   ["seed", "node"], "left_anti")
             .select("seed", "node", F.lit(h).alias("hops"))
             .localCheckpoint())

@@ -28,23 +28,7 @@ from pyspark.sql import functions as F
 from big_data_analytics_spark.catalog import load_table
 from big_data_analytics_spark.operators.joins import sized_side
 from big_data_analytics_spark.queries import query
-from big_data_analytics_spark.caching import register_cache
-
-#: The distinct (basket, item) and (user, item, qty) relations feed
-#: 3-4 downstream consumers per query; cache one localCheckpoint per
-#: (session, sf_dir) — the graph-module pattern — instead of
-#: re-persisting a fresh DataFrame on every invocation (which would
-#: accumulate cache entries across repeated calls in a long session).
-_REL_CACHE: dict[tuple[str, str, str], "DataFrame"] = register_cache({})
-
-
-def _cached(spark: SparkSession, sf_dir: str, tag: str, build):
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    df = _REL_CACHE.get(key)
-    if df is None:
-        df = build().localCheckpoint()
-        _REL_CACHE[key] = df
-    return df
+from big_data_analytics_spark.caching import memo
 
 
 @query(
@@ -103,10 +87,10 @@ def mb1_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts on the part table's metadata count — broadcast below the
     5M ceiling (today's plan, unchanged), co-partitioned sort-merge
     past it (the documented shape)."""
-    baskets = _cached(
-        spark, sf_dir, "baskets",
+    baskets = memo(
+        spark, ("market", sf_dir, "baskets"),
         lambda: load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey").distinct())
+        .select("l_orderkey", "l_partkey").distinct().localCheckpoint())
     n_baskets = baskets.count()  # cheap: checkpoint-materialized
     n_parts = load_table(spark, sf_dir, "part").count()  # metadata
     tot = baskets.agg(
@@ -217,9 +201,9 @@ def cf1_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         wu = Window.partitionBy("u").orderBy(F.desc("q"), "i")
         return (ratings_all
                 .withColumn("rn", F.row_number().over(wu))
-                .filter(F.col("rn") <= 20).drop("rn"))
+                .filter(F.col("rn") <= 20).drop("rn").localCheckpoint())
 
-    ratings = _cached(spark, sf_dir, "ratings", _build_ratings)
+    ratings = memo(spark, ("market", sf_dir, "ratings"), _build_ratings)
     norms = ratings.groupBy("i").agg(
         F.sum((F.col("q") * F.col("q")).cast(dec)).alias("n2"))
     # struct field order (i, q) makes sort_array order by item id, so

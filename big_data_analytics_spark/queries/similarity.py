@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from big_data_analytics_spark.catalog import load_table
 from big_data_analytics_spark.queries import query
-from big_data_analytics_spark.caching import register_cache
+from big_data_analytics_spark.caching import memo
 from big_data_analytics_spark.operators.partitioning import spread_if_undersplit
 
 #: vec_ids below this bound act as the "query set"; the rest are corpus.
@@ -170,15 +170,6 @@ _IVF_COS = (
 # so the whole index build + probe is oracle-checkable in SQL.
 # --------------------------------------------------------------------
 
-#: The IVF assignment (vec → nearest cell) is the persisted index in
-#: production (ivf_write partitions it by cell); rebuild it once per
-#: (session, sf_dir) and localCheckpoint-cache it so warm probes pay
-#: probe + rerank only — the same amortization as the graph queries'
-#: shared edge relation. The one-off build cost stays visible in the
-#: bench's cold section.
-_IVF_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
 @query(
     "v3_ivf_topk",
     oracle=f"""
@@ -233,8 +224,8 @@ def v3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus), queries probe their {N_PROBE} best cells, and only those
     cells' vectors are exactly reranked. At 100 TB the assigned table
     is written partitioned by ``cell`` so a probe's scan prunes to
-    nprobe/n_cells of the data; here the assignment is session-cached
-    (_IVF_CACHE — it IS the index), so repeated probes pay only the
+    nprobe/n_cells of the data; here the assignment is the session-
+    memoized, localCheckpoint'd index, so repeated probes pay only the
     probe-side work, and the probe plan shows the same shape
     (broadcast joins, corpus never shuffled for ranking —
     WindowGroupLimit prunes top-k per partition).
@@ -263,9 +254,7 @@ def v3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # index build: nearest cell per corpus vector; max_by over a struct
     # (cosine, -cell_id) == "highest cosine, then lowest cell_id" —
     # a map-side-combinable aggregate, not a window over the corpus.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assigned = _IVF_CACHE.get(key)
-    if assigned is None:
+    def build() -> DataFrame:
         # The assignment cross-join amplifies every corpus row by
         # n_cells (= n/31, grows with the corpus) interpreted 64-wide
         # folds, but the embeddings parquet arrives as ~1 input split —
@@ -278,7 +267,7 @@ def v3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         para = spark.sparkContext.defaultParallelism
         corpus = (emb.filter(F.col("vec_id") >= N_QUERY_VECS)
                   .repartition(para))
-        assigned = (
+        return (
             corpus.crossJoin(F.broadcast(cent))
             .withColumn("cos_c", cos6(F.col("v"), F.col("cv"),
                                       F.col("vn"), F.col("cn")))
@@ -293,7 +282,8 @@ def v3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.first("vn").alias("vn"),
             )
         ).localCheckpoint()
-        _IVF_CACHE[key] = assigned
+
+    assigned = memo(spark, ("ivf_index", sf_dir), build)
     probes = (
         q.crossJoin(F.broadcast(cent))
         .withColumn("cos_c", cos6(F.col("qv"), F.col("cv"),

@@ -435,9 +435,9 @@ def test_gr6_label_attachment_strategy_is_measured(spark):
     class). Below the threshold the label side must be the broadcast
     build side; above it the join must be sort-merge (no broadcast
     anywhere in the attachment)."""
+    from big_data_analytics_spark.operators.joins import sized_side
     from big_data_analytics_spark.queries.graph_queries import (
         _lpa_labels,
-        _sized_side,
         _weighted_edges,
     )
 
@@ -447,11 +447,11 @@ def test_gr6_label_attachment_strategy_is_measured(spark):
     src_lab = labels.select(labels.node.alias("src"),
                             labels.label.alias("src_label"))
 
-    small = edges.join(_sized_side(src_lab, n_rows=10), "src")
+    small = edges.join(sized_side(src_lab, n_rows=10), "src")
     plan_small = small._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan_small
 
-    big = edges.join(_sized_side(src_lab, n_rows=10_000_000), "src")
+    big = edges.join(sized_side(src_lab, n_rows=10_000_000), "src")
     plan_big = big._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan_big
     assert "BroadcastHashJoin" not in plan_big
@@ -466,8 +466,8 @@ def test_gr7_attachment_strategy_is_measured(spark):
     side; above it the join must be sort-merge."""
     from pyspark.sql import functions as F
 
+    from big_data_analytics_spark.operators.joins import sized_side
     from big_data_analytics_spark.queries.graph_queries import (
-        _sized_side,
         _weighted_edges,
     )
 
@@ -483,10 +483,10 @@ def test_gr7_attachment_strategy_is_measured(spark):
     adj = und.groupBy("u").agg(F.collect_list("v").alias("nbrs"))
 
     for side in (du, adj):
-        plan_small = (und.join(_sized_side(side, n_rows=10), "u")
+        plan_small = (und.join(sized_side(side, n_rows=10), "u")
                       ._jdf.queryExecution().executedPlan().toString())
         assert "BroadcastHashJoin" in plan_small
-        plan_big = (und.join(_sized_side(side, n_rows=10_000_000), "u")
+        plan_big = (und.join(sized_side(side, n_rows=10_000_000), "u")
                     ._jdf.queryExecution().executedPlan().toString())
         assert "SortMergeJoin" in plan_big
         assert "BroadcastHashJoin" not in plan_big
